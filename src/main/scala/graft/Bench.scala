@@ -80,13 +80,15 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Graft.register(spark)
-    // Warm up JIT/codegen + the parquet reader on EVERY table so the
-    // first query touching each one isn't charged footer/metadata setup.
+    // Warm up JIT/codegen + the parquet reader on EVERY table through
+    // the one reader path the queries use, so the first query touching
+    // each table isn't charged footer/metadata setup and the Tables
+    // schema cache is primed.
     graft.sources.Tables.All.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.sources.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.sources.Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count().collect()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Each query runs REPS times and records the MIN: a single-shot
@@ -262,6 +264,8 @@ object Bench {
       catch { case _: Throwable => () } // read-only cwd must not kill the print
     writeMirror(s"BENCH_LOCAL_${round}_c$cpus.json")
     if (cpus == "32") writeMirror(s"BENCH_LOCAL_$round.json")
+    else System.err.println(s"[bench] plain mirror BENCH_LOCAL_$round.json " +
+      s"skipped: written only for SPARK_GRAFT_CPUS=32, this run has $cpus")
     println(line)
     // The LAST stdout line is what the driver parses. r15 (r14 verdict
     // #2): it now carries the per-query map too — the driver's PERF

@@ -17,7 +17,8 @@ import graft.sim.MarketSim
   *     (Spark truncates parquet ns → µs; DuckDB keeps ns);
   *   - window order is always (ts, event_id) — deterministic;
   *   - money-style sums go through DECIMAL casts (order-independent,
-  *     exact) instead of float sums;
+  *     exact) instead of float sums, and are rounded to cents ON THE
+  *     DECIMAL before the double cast ([[roundCents]]);
   *   - scalar constants (e.g. deannualized rf) are computed once in
   *     Scala and inlined into the oracle SQL as round-trip literals.
   */
@@ -27,6 +28,15 @@ object SparkEntry {
 
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.load(s, dir, "events")
+
+  /** An exact DECIMAL rounded HALF_UP to cents, then cast to double;
+    * the oracles write it `CAST(round(<decimal>, 2) AS DOUBLE)`.
+    * Rounding the double instead disagrees on half-cent ties: Spark's
+    * `round(double, 2)` rounds the value's shortest decimal string
+    * HALF_UP, DuckDB's rounds the binary double (x.xx5 is stored just
+    * below the tie), so the two engines land one cent apart.
+    */
+  private[graft] def roundCents(dec: Column): Column = round(dec, 2).cast("double")
 
   /** Streaming-replay harness shared by the streaming_* oracle queries:
     * stage the table file into a watched landing dir (a production
@@ -97,36 +107,46 @@ object SparkEntry {
     * bench rep) only measured the harness. Nothing stateful is shared:
     * checkpoint and sink dirs stay per-invocation, so every replay
     * still starts from a fresh offset log and processes every file.
+    * Each path's entry is keyed on its listing fingerprint (the same
+    * one the `Tables` schema cache uses), so a source rewritten at the
+    * same path is staged again instead of replaying stale bytes.
     * The two-phase sentinel replays (streaming_sessionize /
     * streaming_window_agg) APPEND to their landing dir mid-query and
     * therefore keep staging private dirs — only the immutable-source
     * path goes through this cache.
     */
   private val stagedSources = scala.collection.concurrent.TrieMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+    String, (Seq[(String, Long, Long)], String)]()
 
   /** Stage `path` (single parquet file OR a directory of part files —
     * a dir copied as one entry arrives EMPTY and the replay silently
     * processes zero batches) into a fresh landing dir, once per
-    * process; returns (landing dir, source schema).
+    * process and source listing; returns (landing dir, source schema).
     */
-  private def stageSource(s: SparkSession, path: String,
-                          table: String): (String, org.apache.spark.sql.types.StructType) =
-    stagedSources.getOrElseUpdate(path, {
-      val in = java.nio.file.Files.createTempDirectory(s"graft-src-$table")
-      val srcPath = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.isDirectory(srcPath)) {
-        val it = java.nio.file.Files.list(srcPath).iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getFileName.toString.endsWith(".parquet"))
-            java.nio.file.Files.copy(f, in.resolve(f.getFileName))
+  private[graft] def stageSource(s: SparkSession, path: String,
+                                 table: String): (String, org.apache.spark.sql.types.StructType) = {
+    val schema = graft.sources.Tables.schemaOf(s, path) // raises PATH_NOT_FOUND
+    val files = graft.sources.Tables.listing(s, path).getOrElse(Nil)
+    val in = stagedSources.get(path) match {
+      case Some((f, staged)) if f == files => staged
+      case _ =>
+        val landing = java.nio.file.Files.createTempDirectory(s"graft-src-$table")
+        val srcPath = java.nio.file.Paths.get(path)
+        if (java.nio.file.Files.isDirectory(srcPath)) {
+          val it = java.nio.file.Files.list(srcPath).iterator()
+          while (it.hasNext) {
+            val f = it.next()
+            if (f.getFileName.toString.endsWith(".parquet"))
+              java.nio.file.Files.copy(f, landing.resolve(f.getFileName))
+          }
+        } else {
+          java.nio.file.Files.copy(srcPath, landing.resolve(s"$table.parquet"))
         }
-      } else {
-        java.nio.file.Files.copy(srcPath, in.resolve(s"$table.parquet"))
-      }
-      (in.toString, s.read.parquet(path).schema)
-    })
+        stagedSources.put(path, (files, landing.toString))
+        landing.toString
+    }
+    (in, schema)
+  }
 
   private def streamReplay(s: SparkSession, dir: String, table: String,
                            tag: String, mode: String = "append")
@@ -474,9 +494,9 @@ object SparkEntry {
     li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
-        round(sum(col("l_quantity").cast("decimal(30,8)")).cast("double"), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice").cast("decimal(30,8)")).cast("double"), 2).as("sum_base_price"),
-        round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(30,8)")).cast("double"), 2).as("sum_disc_price"),
+        roundCents(sum(col("l_quantity").cast("decimal(30,8)"))).as("sum_qty"),
+        roundCents(sum(col("l_extendedprice").cast("decimal(30,8)"))).as("sum_base_price"),
+        roundCents(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(30,8)"))).as("sum_disc_price"),
         round(avg(col("l_quantity").cast("decimal(30,8)")).cast("double"), 6).as("avg_qty"),
         round(avg(col("l_discount").cast("decimal(30,8)")).cast("double"), 6).as("avg_disc"),
         count(lit(1)).as("count_order"))
@@ -2755,7 +2775,7 @@ object SparkEntry {
         .agg(round(Tick.orderFlowImbalance(col("sv")), 6).as("ofi"))),
     "tick_traded_value" -> ((s, dir) =>
       events(s, dir).groupBy(col("event_type"))
-        .agg(round(sum((col("value") * volume).cast("decimal(30,10)")).cast("double"), 2)
+        .agg(roundCents(sum((col("value") * volume).cast("decimal(30,10)")))
           .as("traded_value"))),
     "tick_vwap" -> ((s, dir) =>
       events(s, dir).groupBy(col("event_type"))
@@ -2818,8 +2838,8 @@ object SparkEntry {
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,8)")).cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .cast("decimal(30,8)"))).as("revenue"),
           count(lit(1)).as("n_items"))
     }),
     "rel_topn_per_group" -> ((s, dir) => {
@@ -2911,8 +2931,8 @@ object SparkEntry {
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .rollup(col("r_name"), col("n_name"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,8)")).cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .cast("decimal(30,8)"))).as("revenue"),
           count(lit(1)).as("n_items"))
         .select(coalesce(col("r_name"), lit("ALL")).as("r_name"),
           coalesce(col("n_name"), lit("ALL")).as("n_name"),
@@ -2925,8 +2945,7 @@ object SparkEntry {
       val o = tbl(s, dir, "orders")
       o.groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(round(sum(col("o_totalprice").cast("decimal(30,8)"))
-          .cast("double"), 2))
+        .agg(roundCents(sum(col("o_totalprice").cast("decimal(30,8)"))))
         .select(col("o_orderpriority"), col("F").as("rev_f"),
           col("O").as("rev_o"), col("P").as("rev_p"))
     }),
@@ -2952,7 +2971,7 @@ object SparkEntry {
         .orderBy(col("rev").desc, col("l_orderkey"))
         .limit(10)
         .select(col("l_orderkey"),
-          round(col("rev").cast("double"), 2).as("revenue"),
+          roundCents(col("rev")).as("revenue"),
           col("o_orderdate_us"))
     }),
     // Cube (op 185): revenue over ALL 2² grouping combinations of
@@ -2967,8 +2986,7 @@ object SparkEntry {
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .cube(col("r_name"), col("o_orderpriority"))
-        .agg(round(sum(col("o_totalprice").cast("decimal(30,8)"))
-          .cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum(col("o_totalprice").cast("decimal(30,8)"))).as("revenue"),
           count(lit(1)).as("n_orders"))
         .select(coalesce(col("r_name"), lit("ALL")).as("r_name"),
           coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
@@ -3011,8 +3029,8 @@ object SparkEntry {
         .join(sup, col("l_suppkey") === col("s_suppkey") &&
           col("c_nationkey") === col("s_nationkey"))
         .groupBy(col("n_name"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,8)")).cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .cast("decimal(30,8)"))).as("revenue"),
           count(lit(1)).as("n_items"))
     }),
     // Decorrelated scalar subquery (op 213): "orders above their
@@ -3030,7 +3048,7 @@ object SparkEntry {
         .where(col("o_totalprice").cast("decimal(30,8)") * col("n") > col("s"))
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_above"),
-          round(sum(col("o_totalprice").cast("decimal(30,8)")).cast("double"), 2)
+          roundCents(sum(col("o_totalprice").cast("decimal(30,8)")))
             .as("sum_above"))
     }),
     // TPC-H Q18 shape (op 245, large-volume orders): orders whose
@@ -3051,7 +3069,7 @@ object SparkEntry {
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
           unix_micros(col("o_orderdate")).as("o_orderdate_us"),
           round(col("o_totalprice"), 2).as("o_totalprice"),
-          round(col("qty").cast("double"), 2).as("total_qty"))
+          roundCents(col("qty")).as("total_qty"))
     }),
     // TPC-H Q6 shape (op 234, the forecast-revenue-change scan): a
     // pure filter-aggregate with NO join — the canonical predicate-
@@ -3063,8 +3081,8 @@ object SparkEntry {
           col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
           col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
           col("l_quantity") < 24)
-        .agg(round(sum((col("l_extendedprice") * col("l_discount"))
-          .cast("decimal(30,8)")).cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum((col("l_extendedprice") * col("l_discount"))
+          .cast("decimal(30,8)"))).as("revenue"),
           count(lit(1)).as("n_items"))),
     // TPC-DS Q88 shape (op 355; the multi-band one-scan report): eight
     // quantity-band counts + exact-decimal revenue bands from ONE
@@ -3091,8 +3109,8 @@ object SparkEntry {
         sum(band(2)).as("n_b3"), sum(band(3)).as("n_b4"),
         sum(band(4)).as("n_b5"), sum(band(5)).as("n_b6"),
         sum(band(6)).as("n_b7"), sum(band(7)).as("n_b8"),
-        round(rev(0).cast("double"), 2).as("rev_b1"),
-        round(rev(7).cast("double"), 2).as("rev_b8"))
+        roundCents(rev(0)).as("rev_b1"),
+        roundCents(rev(7)).as("rev_b8"))
     }),
     // TPC-H Q17 shape (op 292, small-quantity-order revenue): average
     // yearly revenue lost if small orders (< 20% of the part's mean
@@ -3141,7 +3159,7 @@ object SparkEntry {
         .where(col("supp_nation") =!= col("cust_nation"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(round(sum(vol).cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum(vol)).as("revenue"),
           count(lit(1)).as("n_items"))
     }),
     // TPC-H Q13 shape (op 300, customer order-count distribution):
@@ -3221,7 +3239,7 @@ object SparkEntry {
             year(col("o_orderdate")).cast("long").as("o_year")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("nation"), col("o_year"))
-        .agg(round(sum(profit).cast("double"), 2).as("sum_profit"),
+        .agg(roundCents(sum(profit)).as("sum_profit"),
           count(lit(1)).as("n_items"))
     }),
     // TPC-H Q11 shape (op 311, important stock): per-part inventory
@@ -3277,7 +3295,7 @@ object SparkEntry {
         .join(broadcast(sup.select(col("s_suppkey"), col("s_name"))),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
-          round(col("total_rev").cast("double"), 2).as("total_revenue"))
+          roundCents(col("total_rev")).as("total_revenue"))
     }),
     // TPC-H Q16 shape (op 313, supplier-part relationships): distinct
     // suppliers per (brand, type, size) bucket for mid-size non-PROMO
@@ -3440,8 +3458,7 @@ object SparkEntry {
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("numcust"),
-          round(sum(col("c_acctbal").cast("decimal(30,8)"))
-            .cast("double"), 2).as("totacctbal"))
+          roundCents(sum(col("c_acctbal").cast("decimal(30,8)"))).as("totacctbal"))
     }),
     // TPC-H Q8 shape (op 298, national market share): NATION_2's
     // share of ASIA-customer PROMO revenue by order year — the
@@ -3513,7 +3530,7 @@ object SparkEntry {
         .orderBy(col("rev").desc, col("c_custkey"))
         .limit(20)
         .select(col("c_custkey"), col("c_name"), col("n_name"),
-          round(col("rev").cast("double"), 2).as("revenue"), col("n_items"))
+          roundCents(col("rev")).as("revenue"), col("n_items"))
     }),
     // TPC-H Q14 shape (op 274, promotion effect): what share of one
     // month's revenue came from PROMO parts. The month filter reaches
@@ -3533,7 +3550,7 @@ object SparkEntry {
             sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0.0)
               .cast("decimal(30,8)"))).cast("double") /
             sum(rev).cast("double")), 6).as("promo_revenue_pct"),
-          round(sum(rev).cast("double"), 2).as("total_revenue"),
+          roundCents(sum(rev)).as("total_revenue"),
           count(lit(1)).as("n_items"))
     }),
     // TPC-H Q19 shape (op 281, discounted revenue under disjunctive
@@ -3553,8 +3570,8 @@ object SparkEntry {
           col("l_quantity") >= 20 && col("l_quantity") <= 30)
       li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
         .where(pred)
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,8)")).cast("double"), 2).as("revenue"),
+        .agg(roundCents(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .cast("decimal(30,8)"))).as("revenue"),
           count(lit(1)).as("n_items"))
     }),
     // Explicit GROUPING SETS (op 282): the general form completing
@@ -3569,7 +3586,7 @@ object SparkEntry {
       tbl(s, dir, "customer").createOrReplaceTempView("gs_customer")
       s.sql("""SELECT coalesce(c_mktsegment, 'ALL') AS seg,
         |  coalesce(o_orderpriority, 'ALL') AS pri,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,8))) AS DOUBLE), 2)
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,8))), 2) AS DOUBLE)
         |    AS revenue,
         |  count(*) AS n_orders
         |FROM gs_orders JOIN gs_customer ON o_custkey = c_custkey
@@ -6053,7 +6070,7 @@ object SparkEntry {
         |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
     "tick_traded_value" ->
       s"""SELECT event_type,
-        |  round(CAST(sum(CAST(value * $SQL_VOL AS DECIMAL(30,10))) AS DOUBLE), 2) AS traded_value
+        |  CAST(round(sum(CAST(value * $SQL_VOL AS DECIMAL(30,10))), 2) AS DOUBLE) AS traded_value
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     "tick_vwap" ->
       s"""SELECT event_type,
@@ -6121,9 +6138,9 @@ object SparkEntry {
 
     "rel_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
-        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(30,8))) AS DOUBLE), 2) AS sum_qty,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,8))) AS DOUBLE), 2) AS sum_base_price,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))) AS DOUBLE), 2) AS sum_disc_price,
+        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(30,8))), 2) AS DOUBLE) AS sum_qty,
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,8))), 2) AS DOUBLE) AS sum_base_price,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))), 2) AS DOUBLE) AS sum_disc_price,
         |  round(CAST(avg(CAST(l_quantity AS DECIMAL(30,8))) AS DOUBLE), 6) AS avg_qty,
         |  round(CAST(avg(CAST(l_discount AS DECIMAL(30,8))) AS DOUBLE), 6) AS avg_disc,
         |  count(*) AS count_order
@@ -6133,7 +6150,7 @@ object SparkEntry {
         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
     "rel_join_agg" ->
       """SELECT r_name, n_name,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
@@ -6189,7 +6206,7 @@ object SparkEntry {
     "rel_rollup" ->
       """SELECT coalesce(r_name, 'ALL') AS r_name,
         |  coalesce(n_name, 'ALL') AS n_name,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
@@ -6200,9 +6217,9 @@ object SparkEntry {
         |ORDER BY r_name, n_name""".stripMargin,
     "rel_pivot" ->
       """SELECT o_orderpriority,
-        |  round(CAST(sum(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS DECIMAL(30,8)) END) AS DOUBLE), 2) AS rev_f,
-        |  round(CAST(sum(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS DECIMAL(30,8)) END) AS DOUBLE), 2) AS rev_o,
-        |  round(CAST(sum(CASE WHEN o_orderstatus = 'P' THEN CAST(o_totalprice AS DECIMAL(30,8)) END) AS DOUBLE), 2) AS rev_p
+        |  CAST(round(sum(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS DECIMAL(30,8)) END), 2) AS DOUBLE) AS rev_f,
+        |  CAST(round(sum(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS DECIMAL(30,8)) END), 2) AS DOUBLE) AS rev_o,
+        |  CAST(round(sum(CASE WHEN o_orderstatus = 'P' THEN CAST(o_totalprice AS DECIMAL(30,8)) END), 2) AS DOUBLE) AS rev_p
         |FROM orders
         |GROUP BY o_orderpriority
         |ORDER BY o_orderpriority""".stripMargin,
@@ -6222,13 +6239,13 @@ object SparkEntry {
         |    epoch_us(max(o_orderdate)) AS o_orderdate_us
         |  FROM j GROUP BY l_orderkey
         |)
-        |SELECT l_orderkey, round(CAST(rev AS DOUBLE), 2) AS revenue,
+        |SELECT l_orderkey, CAST(round(rev, 2) AS DOUBLE) AS revenue,
         |  o_orderdate_us
         |FROM g ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
     "rel_cube" ->
       """SELECT coalesce(r_name, 'ALL') AS r_name,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,8))), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_orders
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
@@ -6253,8 +6270,8 @@ object SparkEntry {
     // constraint) and the exact-DECIMAL revenue sum.
     "rel_tpch_q5" ->
       """SELECT n_name,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    AS DECIMAL(30,8))), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM customer, orders, lineitem, supplier, nation, region
         |WHERE c_custkey = o_custkey AND o_orderkey = l_orderkey
@@ -6273,7 +6290,7 @@ object SparkEntry {
         |  FROM orders
         |)
         |SELECT o_custkey, count(*) AS n_above,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,8))) AS DOUBLE), 2)
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,8))), 2) AS DOUBLE)
         |    AS sum_above
         |FROM s WHERE CAST(o_totalprice AS DECIMAL(30,8)) * n > s
         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
@@ -6287,7 +6304,7 @@ object SparkEntry {
         |SELECT c_custkey, c_name, o_orderkey,
         |  epoch_us(o_orderdate) AS o_orderdate_us,
         |  round(o_totalprice, 2) AS o_totalprice,
-        |  round(CAST(qty AS DOUBLE), 2) AS total_qty
+        |  CAST(round(qty, 2) AS DOUBLE) AS total_qty
         |FROM orders
         |JOIN big ON o_orderkey = l_orderkey
         |JOIN customer ON o_custkey = c_custkey
@@ -6309,17 +6326,17 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN ${b(5)} THEN 1 ELSE 0 END) AS BIGINT) AS n_b6,
         |  CAST(sum(CASE WHEN ${b(6)} THEN 1 ELSE 0 END) AS BIGINT) AS n_b7,
         |  CAST(sum(CASE WHEN ${b(7)} THEN 1 ELSE 0 END) AS BIGINT) AS n_b8,
-        |  round(CAST(sum(CASE WHEN ${b(0)}
+        |  CAST(round(sum(CASE WHEN ${b(0)}
         |    THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))
-        |    ELSE CAST(0 AS DECIMAL(30,8)) END) AS DOUBLE), 2) AS rev_b1,
-        |  round(CAST(sum(CASE WHEN ${b(7)}
+        |    ELSE CAST(0 AS DECIMAL(30,8)) END), 2) AS DOUBLE) AS rev_b1,
+        |  CAST(round(sum(CASE WHEN ${b(7)}
         |    THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))
-        |    ELSE CAST(0 AS DECIMAL(30,8)) END) AS DOUBLE), 2) AS rev_b8
+        |    ELSE CAST(0 AS DECIMAL(30,8)) END), 2) AS DOUBLE) AS rev_b8
         |FROM lineitem""".stripMargin
     },
     "rel_tpch_q6" ->
 """SELECT
-        |  round(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(30,8))), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -6362,7 +6379,7 @@ object SparkEntry {
         |    AND n1.n_name <> n2.n_name
         |)
         |SELECT supp_nation, cust_nation, l_year,
-        |  round(CAST(sum(vol) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(vol), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM sel GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
     // op 300: left join preserves the zero-order tail.
@@ -6400,9 +6417,9 @@ object SparkEntry {
     // sum.
     "rel_tpch_q9" ->
       """SELECT n_name AS nation, year(o_orderdate) AS o_year,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    - 0.5 * p_retailprice * l_quantity AS DECIMAL(30,8)))
-        |    AS DOUBLE), 2) AS sum_profit,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    - 0.5 * p_retailprice * l_quantity AS DECIMAL(30,8))),
+        |    2) AS DOUBLE) AS sum_profit,
         |  count(*) AS n_items
         |FROM lineitem
         |JOIN part ON p_partkey = l_partkey
@@ -6439,7 +6456,7 @@ object SparkEntry {
         |  GROUP BY l_suppkey
         |)
         |SELECT s_suppkey, s_name,
-        |  round(CAST(total_rev AS DOUBLE), 2) AS total_revenue
+        |  CAST(round(total_rev, 2) AS DOUBLE) AS total_revenue
         |FROM rev JOIN supplier ON s_suppkey = l_suppkey
         |WHERE total_rev = (SELECT max(total_rev) FROM rev)
         |ORDER BY s_suppkey""".stripMargin,
@@ -6524,7 +6541,7 @@ object SparkEntry {
         |  FROM customer WHERE c_acctbal > 0.0
         |)
         |SELECT n_name, count(*) AS numcust,
-        |  round(CAST(sum(CAST(c_acctbal AS DECIMAL(30,8))) AS DOUBLE), 2)
+        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(30,8))), 2) AS DOUBLE)
         |    AS totacctbal
         |FROM customer CROSS JOIN ab
         |JOIN nation ON n_nationkey = c_nationkey
@@ -6565,7 +6582,7 @@ object SparkEntry {
         |      ELSE CAST(0.0 AS DECIMAL(30,8)) END) AS DOUBLE) /
         |    CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))) AS DOUBLE),
         |    6) AS promo_revenue_pct,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))) AS DOUBLE), 2) AS total_revenue,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))), 2) AS DOUBLE) AS total_revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1997-09-01'
@@ -6573,7 +6590,7 @@ object SparkEntry {
     // op 281: identical disjunctive predicate, exact DECIMAL revenue.
     "rel_tpch_q19" ->
       """SELECT
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,8))), 2) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
@@ -6586,7 +6603,7 @@ object SparkEntry {
     "rel_grouping_sets" ->
       """SELECT coalesce(c_mktsegment, 'ALL') AS seg,
         |  coalesce(o_orderpriority, 'ALL') AS pri,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,8))) AS DOUBLE), 2)
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,8))), 2) AS DOUBLE)
         |    AS revenue,
         |  count(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
@@ -6647,7 +6664,7 @@ object SparkEntry {
         |  FROM j GROUP BY 1, 2, 3
         |)
         |SELECT c_custkey, c_name, n_name,
-        |  round(CAST(rev AS DOUBLE), 2) AS revenue, n_items
+        |  CAST(round(rev, 2) AS DOUBLE) AS revenue, n_items
         |FROM g ORDER BY rev DESC, c_custkey LIMIT 20""".stripMargin
   )
 
@@ -10169,7 +10186,7 @@ object SparkEntry {
       val in = java.nio.file.Files.createTempDirectory("graft-sses-in")
       java.nio.file.Files.copy(java.nio.file.Paths.get(path),
         in.resolve("events.parquet"))
-      val raw = s.read.parquet(path)
+      val raw = graft.sources.Tables.read(s, path)
       val stageSec = (System.nanoTime() - tS0) / 1e9
       var wallSec = 0.0
       var addBatchSec = 0.0
@@ -10612,7 +10629,7 @@ object SparkEntry {
       val in = java.nio.file.Files.createTempDirectory("graft-swa-in")
       java.nio.file.Files.copy(java.nio.file.Paths.get(path),
         in.resolve("events.parquet"))
-      val raw = s.read.parquet(path)
+      val raw = graft.sources.Tables.read(s, path)
       val stageSec = (System.nanoTime() - tS0) / 1e9
       var wallSec = 0.0
       var addBatchSec = 0.0

@@ -1,22 +1,89 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Source layer for the star-schema testdata (and any parquet lake with
-  * the same shape). Readers stay plain `spark.read.parquet` so Catalyst
-  * keeps pushdown/pruning; the one normalization this layer owns is the
+  * the same shape). Readers stay plain parquet scans so Catalyst keeps
+  * pushdown/pruning; the one normalization this layer owns is the
   * nanosecond-timestamp fix-up for `events`.
+  *
+  * Schema cache. Inferring a parquet schema runs a footer-reading Spark
+  * job on every `spark.read.parquet` (33–59 ms per load at sf0.01 on a
+  * 4-core VM), so each query that loads a table paid it again. [[schemaOf]] resolves each
+  * source path's `StructType` once per process and [[read]] hands it to
+  * `spark.read.schema(...)`, which skips inference:
+  *   - METADATA ONLY. The cache holds a `StructType` and nothing else —
+  *     never rows, a `DataFrame` or a relation. Every load builds a
+  *     fresh relation with fresh attribute ids, so two loads of one
+  *     table joined to each other (n1 ⋈ n2 in the TPC-H shapes) still
+  *     resolve unambiguously, and every scan reads the files as they
+  *     are on disk.
+  *   - KEY. One entry per path, valid while both of these match: the
+  *     path's listing (name, length and mtime of the file, or of each
+  *     entry of a directory — one Hadoop `getFileStatus`, plus one
+  *     `listStatus` for a directory) and the session confs that shape
+  *     parquet schema inference ([[InferenceConfs]]). A rewrite at the
+  *     same path or a flipped conf re-infers and replaces the entry.
+  *   - A missing path is not cached: it falls through to a plain
+  *     `spark.read.parquet`, so callers still see `PATH_NOT_FOUND`.
   */
 object Tables {
   val All: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = read(spark, s"$dir/$name.parquet")
     normalizeTimestamps(if (name == "events") normalizeEventTs(df) else df)
   }
+
+  /** A parquet scan of `path` with its schema from [[schemaOf]]. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** Session confs whose values change the schema parquet inference
+    * returns for the same files; part of the [[schemaOf]] key. */
+  private val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (name, length, mtime) of `path` — of each entry when it is a
+    * directory — or None when it does not exist. */
+  private[graft] def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      val entries = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+      Some(entries.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  private val schemas =
+    TrieMap[String, ((Seq[(String, Long, Long)], Seq[Option[String]]), StructType)]()
+
+  /** The inferred parquet schema of `path`, inferred once per (listing,
+    * inference confs) and process — see the cache contract above. */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    listing(spark, path) match {
+      case None => spark.read.parquet(path).schema // raises PATH_NOT_FOUND
+      case Some(files) =>
+        val key = (files, InferenceConfs.map(spark.conf.getOption))
+        schemas.get(path) match {
+          case Some((k, schema)) if k == key => schema
+          case _ =>
+            val schema = spark.read.parquet(path).schema
+            schemas.put(path, (key, schema))
+            schema
+        }
+    }
 
   /** ns→µs ingest shim (reference README.md:40's nanosecond-support
     * TODO): accept nanosecond-grain event time as int64 ns-since-epoch
